@@ -59,9 +59,13 @@ object Tables {
     * small single-file table scans as ONE task under the 4 MB
     * openCost floor, serializing every CPU-bound narrow map downstream
     * — tokenize/explode/aggregate stages measured 300-900 ms on one
-    * core with 31 idle). Hash-repartitions by `key` — deterministic
-    * (content-keyed, no round-robin sort pass) and join/agg-reusable
-    * downstream. A production source with thousands of splits takes
+    * core with 31 idle; the backfill envelope build and sink write in
+    * [[graft.pipeline.Backfill]]'s `feedOf` ran all ~600k sf0.1
+    * lineitem envelopes in one task). Callers: the fuzzy, text and
+    * multimodal operators and every backfill entity feed.
+    * Hash-repartitions by `key` — deterministic (content-keyed, no
+    * round-robin sort pass) and join/agg-reusable downstream. A
+    * production source with thousands of splits takes
     * the no-op branch, so nothing is shuffled at scale. Both branches
     * of a self-joining consumer see the SAME exchange subtree, so AQE
     * stage reuse runs the scan once. */

@@ -13,7 +13,10 @@ import graft.Tables
   *  - its 3-level driver loop (key-store pages → merchants × `parallel`
   *    → LIMIT/OFFSET row pages) becomes ONE partitioned scan per entity
   *    with pushed-down predicates — no driver orchestration, Spark's
-  *    scheduler is the concurrency;
+  *    scheduler is the concurrency. A source that arrives as fewer
+  *    splits than the cores (one parquet row group, a JDBC read without
+  *    bounds) is hash-spread by its key before the envelope build, so
+  *    the JSON build and the sink write still use every core;
   *  - the per-merchant key-store lookup becomes a broadcast hash join;
   *  - per-row `log_*` Kafka produces become a single columnar envelope
   *    projection + a batched sink write;
@@ -132,11 +135,20 @@ object Backfill {
   }
 
   /** One entity's event feed with an arbitrary tenant column: filtered
-    * scan → envelope. */
+    * scan → spread → envelope. The spread is [[Tables.spread]] keyed on
+    * the envelope key expression: a source that arrives as fewer splits
+    * than the cores (a one-row-group parquet table, an unbounded JDBC
+    * read) would otherwise build every JSON envelope and write every
+    * sink file in one task. The exchange sits below the envelope, so it
+    * moves only the narrow raw payload columns, never the JSON `value`;
+    * and because the envelope aliases that exact cast as `key`, a
+    * consumer that clusters on `key` ([[compactRun]]) needs no second
+    * exchange. A source with enough splits is left as it is. */
   private def feedOf(spark: SparkSession, dir: String, e: Entity,
       cfg: Config, tenant: Column): DataFrame =
-    envelope(cfg.source(spark, dir, e).filter(predicates(e, cfg)),
-      e, tenant)
+    envelope(Tables.spread(spark,
+      cfg.source(spark, dir, e).filter(predicates(e, cfg)),
+      col(e.keyCol).cast("string")), e, tenant)
 
   /** One entity's event feed under the config's single tenant. */
   def entityFeed(spark: SparkSession, dir: String, e: Entity,
@@ -355,13 +367,12 @@ object Backfill {
     // stream actually emitted; runs with DIFFERENT scopes must use
     // different stateDirs (a mark advanced by one scope would skip the
     // other scope's older rows).
-    val feed = cfg.entities.map { e =>
-      val base = cfg.source(spark, dir, e).filter(predicates(e, cfg))
-      val src = prior.get(e.name)
+    val feed = run(spark, dir, cfg.copy(source = (s, d, e) => {
+      val base = cfg.source(s, d, e)
+      prior.get(e.name)
         .map(h => base.filter(col(e.timeCol).cast("timestamp_ntz") > lit(h)))
         .getOrElse(base)
-      envelope(src, e, lit(cfg.tenant))
-    }.reduce(_ unionAll _)
+    }))
 
     // max over the NTZ cast: an LTZ-typed timeCol (JDBC TIMESTAMP)
     // would otherwise collect as java.sql.Timestamp and explode the
@@ -440,33 +451,23 @@ object Backfill {
     *  - per-entity aggregation, union AFTER: compaction groups can
     *    never span entities (`entity` is in the group key and constant
     *    per branch), and splitting lets each branch reuse one exchange;
-    *  - each entity is hash-repartitioned by its envelope key STRING
-    *    before the envelope projection, so the group-by's clustering
+    *  - a small source is spread by its envelope key STRING before the
+    *    envelope projection ([[feedOf]]), so the group-by's clustering
     *    requirement is already satisfied (alias-aware partitioning:
     *    the envelope aliases that exact cast) and the 200-byte JSON
     *    `value` column is never shuffled at all — the only exchange
     *    carries the narrow raw payload columns (guide §8: decide over
     *    light rows, move heavy bytes once — here the heavy JSON is
-    *    built AFTER its rows are already where they aggregate);
-    *  - the pre-spread only fires when the scan arrived as fewer
-    *    splits than the per-entity parallelism share (a small
-    *    single-file table scans as ONE task and serializes the whole
-    *    CPU-bound envelope+agg stage, guide §2.5 "input skew"); a
-    *    production source with thousands of splits skips the branch
-    *    and the group-by inserts its usual identity exchange. */
+    *    built AFTER its rows are already where they aggregate); a
+    *    production source with enough splits is not spread, and the
+    *    group-by inserts its usual identity exchange. */
   def compactRun(spark: SparkSession, dir: String,
-      cfg: Config = Config()): DataFrame = {
-    val share = math.max(1, spark.sparkContext.defaultParallelism /
-      math.max(1, cfg.entities.size))
+      cfg: Config = Config()): DataFrame =
     cfg.entities.map { e =>
-      val base = cfg.source(spark, dir, e)
-      val src = if (base.rdd.getNumPartitions < share)
-        base.repartition(share, col(e.keyCol).cast("string")) else base
-      run(spark, dir, cfg.copy(entities = Seq(e), source = (_, _, _) => src))
+      run(spark, dir, cfg.copy(entities = Seq(e)))
         .groupBy("entity", "key", "tenant", "value")
         .agg(count(lit(1)).as("n_deliveries"))
     }.reduce(_ unionAll _)
-  }
 
   /** Batch Kafka sink for the feed (production path; offline harness
     * writes parquet instead — zero egress). */

@@ -414,5 +414,43 @@ class PipelineSpec extends AnyFunSuite {
       l.contains("Exchange hashpartitioning") && l.contains("value#")).toSeq
     assert(exchangesWithValue.isEmpty,
       s"envelope JSON must not be shuffled: $exchangesWithValue")
+    val hashExchanges = plan.linesIterator
+      .count(_.contains("Exchange hashpartitioning"))
+    assert(hashExchanges == B.defaultEntities.size, plan)
+  }
+
+  test("feed spread gate forced both ways: same checksum, value never shuffled") {
+    // the spread in the entity feed switches on only when a source has
+    // fewer splits than defaultParallelism; both branches must emit the
+    // same rows. Case A: every entity as ONE partition (spread branch).
+    // Case B: the same rows already in >= defaultParallelism partitions,
+    // checkpointed so the source itself carries no exchange (no-op branch).
+    import org.apache.spark.sql.DataFrame
+    val B = graft.pipeline.Backfill
+    val dp = spark.sparkContext.defaultParallelism
+    def feed(shape: DataFrame => DataFrame) = {
+      val srcs = B.defaultEntities.map(e =>
+        e.name -> shape(Tables.load(spark, sf, e.table)).localCheckpoint()).toMap
+      B.run(spark, sf, B.Config(source = (_, _, e) => srcs(e.name)))
+    }
+    val single = feed(_.coalesce(1))
+    val wide = feed(_.repartition(dp))
+    def sum(f: DataFrame) =
+      B.feedChecksum(f).collect().map(_.toSeq).toSeq
+    assert(sum(single) == sum(wide))
+    assert(sum(single) == sum(B.run(spark, sf)))
+    // an Exchange line prints only its partitioning keys, so what each
+    // shuffle carries is read from the exchange nodes' output columns
+    object Plans
+        extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val planA = single.queryExecution.executedPlan
+    val carried = Plans.collect(planA) {
+      case s: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
+        s.output.map(_.name)
+    }
+    assert(carried.size == B.defaultEntities.size, planA)
+    assert(!carried.flatten.contains("value"), planA)
+    val planB = wide.queryExecution.executedPlan.toString
+    assert(!planB.contains("Exchange"), planB)
   }
 }

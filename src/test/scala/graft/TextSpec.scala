@@ -704,6 +704,16 @@ class TextSpec extends AnyFunSuite {
     }
   }
 
+  test("bm25Search: an empty query list ranks nothing, like its index twin") {
+    val R = graft.operators.Retrieval
+    // the empty term array literal is untyped; it must still plan (it
+    // widens to array<string> inside array_contains) and match nothing
+    val got = R.bm25Search(spark, TestSpark.sf, query = Seq.empty).collect()
+    assert(got.isEmpty)
+    assert(R.bm25FromIndex(spark, TestSpark.sf, query = Seq.empty)
+      .collect().isEmpty)
+  }
+
   test("phraseSearch counts exact adjacent occurrences, ignores bags") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("phrasefix").toString
